@@ -43,27 +43,6 @@ def tree_rss_bytes(root: int) -> int:
     return total * os.sysconf("SC_PAGE_SIZE")
 
 
-def tree_cpu_s(root: int) -> float:
-    """CPU seconds (user + system, own and reaped children's) used so far
-    by ``root``, its descendants and this process."""
-    ticks = 0
-    for pid in [os.getpid(), *_tree(root)]:
-        try:
-            with open(f"/proc/{pid}/stat") as f:
-                fields = f.read().rsplit(")", 1)[1].split()
-            ticks += sum(int(x) for x in fields[11:15])  # utime stime cutime cstime
-        except OSError:
-            pass
-    return ticks / os.sysconf("SC_CLK_TCK")
-
-
-def steal_s() -> float:
-    """CPU time the hypervisor gave to others while this host wanted it,
-    summed over all cpus (the ``steal`` column of /proc/stat)."""
-    with open("/proc/stat") as f:
-        return int(f.readline().split()[8]) / os.sysconf("SC_CLK_TCK")
-
-
 class RssSampler:
     """Samples the RSS of the JVM process tree (JVM plus its Python workers)
     every ``period`` seconds on a daemon thread; ``peak`` is the maximum seen

@@ -20,10 +20,14 @@ from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 # the modules of spel_spark that the workloads call into
-LAYERS = ("session", "mentions", "blocking", "scoring", "clustering", "dedup", "io")
+LAYERS = (
+    "session", "mentions", "blocking", "scoring", "clustering", "dedup", "incremental",
+    "io",
+)
 # stage-metric fields summed over a layer's spans
 STAGE_FIELDS = (
     "jobs", "tasks", "task_s", "shuffle_read_bytes", "shuffle_write_bytes", "spill_bytes",
+    "output_bytes",
 )
 # every field ``layer_totals`` reports for a layer, with its unit
 LAYER_UNITS = {
@@ -94,6 +98,7 @@ class StageReader:
             out["shuffle_read_bytes"] += int(st.shuffleReadBytes())
             out["shuffle_write_bytes"] += int(st.shuffleWriteBytes())
             out["spill_bytes"] += int(st.diskBytesSpilled())
+            out["output_bytes"] += int(st.outputBytes())
             if worst is None or run_ms > worst[0]:
                 worst = (run_ms, int(st.stageId()), int(st.attemptId()))
         if worst is None:
@@ -110,13 +115,20 @@ class StageReader:
 class Tracer:
     """Span recorder.  Disabled, ``span`` is a no-op context manager."""
 
-    def __init__(self, spark, enabled: bool):
+    def __init__(self, enabled: bool):
         self.enabled = enabled
-        self.sc = spark.sparkContext
-        self.reader = StageReader(spark) if enabled else None
+        self.sc = self.reader = None
         self.spans: list[Span] = []
         self._open: list[int] = []  # indices of the spans still open
         self._ids = itertools.count()
+
+    def bind(self, spark) -> None:
+        """Trace the jobs of ``spark``'s context from now on (a span's
+        metrics are read when it ends, so a context may be replaced
+        between spans)."""
+        self.sc = spark.sparkContext
+        if self.enabled:
+            self.reader = StageReader(spark)
 
     def record(self, name: str, layer: str, start: float, end: float) -> None:
         """A span for work that ran before any Spark job could be tagged."""

@@ -7,12 +7,16 @@ one layer at a time, materializing each layer's output under its span so
 that the jobs it triggers are attributed to it.  Both return the
 order-insensitive checksum of their result, so the staged composition is
 checked against the program's own entry point in every traced run.
+``trace_extra``, when a workload has one, is traced work beside the job
+that a traced run adds.
 """
 
 from __future__ import annotations
 
+import dataclasses
 import os
 import shutil
+import time
 
 import numpy as np
 import pandas as pd
@@ -32,8 +36,15 @@ from spel_spark.operators.mentions import (
 from spel_spark.operators.metrics import pairwise_micro_f1, resolve_labeled_pairs
 from spel_spark.operators.scoring import score_pairs, threshold_edges
 from spel_spark.pipeline import PipelineConfig, load_transcripts_df, run_pipeline
+from spel_spark.streaming.incremental import merge_batch, read_clusters
 
 ER_TURNS = 10_000
+# the incremental epoch of traced er_checkpointed runs: state bootstrapped
+# on the first INC_TURNS - INC_DELTA turns, then the last INC_DELTA merged
+# as one delta epoch.  Each merge_batch call pays a floor of ~40 Spark
+# jobs whatever its size, so a small state keeps the traced run short.
+INC_TURNS = 1_000
+INC_DELTA = 100
 N_DOCS = 2_000
 MIN_F1 = 0.99
 # documents shaped like the fixture the dedup flagship is specified on:
@@ -81,18 +92,19 @@ class ErCheckpointed:
     unit = "turns"
     cols = ["mention_id", "cluster_id"]
 
-    def __init__(self, spark: SparkSession, seed: int, work: str):
-        self.spark, self.seed, self.work = spark, seed, work
+    def __init__(self, seed: int, work: str):
         self.input_path = os.path.join(work, "transcripts.parquet")
         self.store_dir = os.path.join(work, "store")
+        self.state_dir = os.path.join(work, "inc_state")
         self.stats: dict = {}
-
-    def generate(self) -> None:
-        self.corpus = generate(seed=self.seed, n_turns=ER_TURNS)
+        self.inc_equals_batch: bool | None = None  # set by trace_extra
+        self.corpus = generate(seed=seed, n_turns=ER_TURNS)
         self.n_items = len(self.corpus.transcripts)
         self.n_mentions = len(self.corpus.gold_mentions)
 
-    def load(self) -> None:
+    def setup(self, spark: SparkSession) -> None:
+        """The inputs written as parquet."""
+        self.spark = spark
         load_transcripts_df(self.spark, self.corpus).write.mode("overwrite").parquet(
             self.input_path
         )
@@ -116,8 +128,15 @@ class ErCheckpointed:
         )
         return checksum(clusters, self.cols)
 
-    def run_twin(self) -> tuple[int, int]:
-        return self.run(store=False)
+    def warm_up(self) -> tuple[int, int]:
+        """The ephemeral twin, untimed: it warms up the JVM's code for the
+        timed job (on a 4-CPU host a cold job's wall spread 0.33, IQR over
+        median across ten seeds, a warm one's 0.11), and its result must
+        equal the job's.  The cache is cleared after it, so the job
+        reuses none of its data."""
+        out = self.run(store=False)
+        self.spark.catalog.clearCache()
+        return out
 
     def run_traced(self, tracer) -> tuple[int, int]:
         """``run_pipeline``'s stage DAG, one layer call at a time; each
@@ -163,6 +182,47 @@ class ErCheckpointed:
         comps.unpersist()
         return out
 
+    def trace_extra(self, tracer) -> None:
+        """One incremental epoch (``streaming.incremental.merge_batch``) on
+        a fresh state of the first INC_TURNS turns, and the merged view
+        read back; the view must equal a batch ``run_pipeline`` with exact
+        pairs over the same turns, which runs first."""
+        turns = self.corpus.transcripts.head(INC_TURNS)
+
+        def transcripts(pdf: pd.DataFrame) -> DataFrame:
+            corpus = dataclasses.replace(self.corpus, transcripts=pdf)
+            return load_transcripts_df(self.spark, corpus)
+
+        def mentions(pdf: pd.DataFrame) -> DataFrame:
+            return with_mention_id(
+                with_norm_surface(extract_mentions(transcripts(pdf)), self.redirects)
+            )
+
+        want = checksum(run_pipeline(
+            self.spark, transcripts(turns), None, redirects=self.redirects,
+            config=PipelineConfig(exact_pairs=True),
+        ), self.cols)
+        shutil.rmtree(self.state_dir, ignore_errors=True)
+        with tracer.span("er_incremental"):
+            with tracer.span("bootstrap"):
+                merge_batch(
+                    self.spark, mentions(turns.iloc[:-INC_DELTA]), self.state_dir, epoch=0
+                )
+            delta = mentions(turns.iloc[-INC_DELTA:]).persist()
+            delta.count()
+            t0 = time.perf_counter()
+            with tracer.span("epoch", "incremental"):
+                merge_batch(self.spark, delta, self.state_dir, epoch=1)
+            t1 = time.perf_counter()
+            with tracer.span("resolve", "incremental") as sp:
+                got = checksum(read_clusters(self.spark, self.state_dir), self.cols)
+                sp.rows_out = got[0]
+            self.stats["epoch_s"] = t1 - t0
+            self.stats["resolve_s"] = time.perf_counter() - t1
+            delta.unpersist()
+        self.inc_equals_batch = got == want
+        self.spark.catalog.clearCache()
+
     def after_run(self) -> None:
         self.stats["stored_bytes"] = dir_bytes(self.store_dir)
         self.spark.catalog.clearCache()
@@ -175,12 +235,15 @@ class ErCheckpointed:
             F.count(F.lit(1)), F.countDistinct("mention_id")
         ).collect()[0]
         self.spark.catalog.clearCache()
-        return {
+        checks = {
             "pair_f1": float(f1["f1"]),
             "pair_f1_ok": float(f1["f1"]) >= MIN_F1,
             # every extracted mention gets exactly one cluster
             "one_row_per_mention": n == distinct == self.n_mentions,
         }
+        if self.inc_equals_batch is not None:
+            checks["incremental_equals_batch"] = self.inc_equals_batch
+        return checks
 
 
 def make_documents(seed: int, n_docs: int) -> pd.DataFrame:
@@ -212,17 +275,17 @@ class DocDedup:
     unit = "docs"
     cols = ["doc_id", "cluster_id", "cluster_size"]
 
-    def __init__(self, spark: SparkSession, seed: int, work: str):
-        self.spark, self.seed, self.work = spark, seed, work
+    def __init__(self, seed: int, work: str):
+        self.work = work
         self.input_path = os.path.join(work, "documents.parquet")
         self.stats: dict = {}
         self.last: DataFrame | None = None
-
-    def generate(self) -> None:
-        self.docs = make_documents(self.seed, N_DOCS)
+        self.docs = make_documents(seed, N_DOCS)
         self.n_items = len(self.docs)
 
-    def load(self) -> None:
+    def setup(self, spark: SparkSession) -> None:
+        """The inputs written as parquet."""
+        self.spark = spark
         self.spark.createDataFrame(self.docs).write.mode("overwrite").parquet(
             self.input_path
         )
@@ -260,6 +323,11 @@ class DocDedup:
         self.stats["cc_rounds"] = cc.get("rounds", 0)
         self.stats["verified_pairs"] = n_pairs
         return checksum(self.last, self.cols)
+
+    # no warm-up: the timed job pays JVM code warm-up, as a cold
+    # cluster_documents call does (warm, its spread was no narrower)
+    warm_up = None
+    trace_extra = None  # the dedup flagship has no incremental mode
 
     def after_run(self) -> None:
         self.spark.catalog.clearCache()
